@@ -125,9 +125,9 @@ object Pipeline {
     * is itself a domain with a read-time view is consumed through the
     * view ([[readDomain]] — its LOGICAL output), never the stored
     * sub-grain; roots and view-less domains read their stored rows
-    * directly, zero overhead. Every pipeline path (batch run, streaming
-    * twin, [[rebuildDomain]]) builds its upstream reader here, so no
-    * consumer site can forget the view. */
+    * directly, zero overhead. Both pipeline paths ([[applyEpoch]],
+    * [[rebuildDomain]]) build their upstream reader here, so no consumer
+    * site can forget the view. */
   private def domainReader(spark: SparkSession, domains: Seq[DomainDef],
       tables: Map[String, LakeTable])(n: String): DataFrame =
     domains.find(_.name == n) match {
@@ -481,97 +481,65 @@ object Pipeline {
         numBuckets, d.keyCols)).toMap
 
   /** Drive the source table AND all domain tables through epochs
-    * [min-watermark+1, maxEpoch] in dependency order. `domains` must be
-    * topologically ordered (each `dependsOn` name appears earlier). */
+    * [min-watermark+1, maxEpoch] in dependency order, one [[applyEpoch]]
+    * per epoch. `domains` must be topologically ordered (each `dependsOn`
+    * name appears earlier); with no domains this is the plain WAL replay
+    * ([[Replayer.run]]). `compactEvery = k > 0` folds the hot buckets
+    * (≥ k delta files) of every table after every k-th epoch and fully
+    * compacts each table with deltas at the end of the run. */
   def run(spark: SparkSession, events: DataFrame, source: LakeTable,
           domains: Seq[DomainDef], tables: Map[String, LakeTable],
           maxEpoch: Long, upToEpoch: Option[Long] = None,
           compactEvery: Int = 0): PipelineReport = {
     validateTopology(domains, tables)
     val stop = upToEpoch.map(u => math.min(u, maxEpoch)).getOrElse(maxEpoch)
-    val start = (source.lastCommittedEpoch +:
-      domains.map(d => tables(d.name).lastCommittedEpoch)).min + 1
+    val all = source +: domains.map(d => tables(d.name))
+    val start = all.map(_.lastCommittedEpoch).min + 1
+    // this feed only covers epochs <= maxEpoch: if the pinned post version
+    // of an algebraic fold has a watermark PAST it (a concurrent writer
+    // with a LONGER feed advanced the source mid-run), the interval's
+    // touched keys cannot be produced from here and the fold must fall
+    // back to the pinned full recompute — filtering this feed would
+    // silently miss the foreign epochs' keys and commit a wrong rollup
+    // that never self-heals. A head watermark <= maxEpoch stays exact even
+    // when it exceeds THIS run's stop: epochs are deterministic feed
+    // slices, so a concurrent driver over the same feed commits identical
+    // content
+    val eventsIn: (Long, Long) => Option[DataFrame] = (lo, hi) =>
+      if (hi <= maxEpoch) Some(events.filter(col("epoch") > lo && col("epoch") <= hi))
+      else None
     var compactions = 0
     var sinceCompact = 0
-    val updates = Seq.newBuilder[TableUpdate]
-
-    (start to stop).foreach { e =>
-      val batch = events.filter(col("epoch") === e)
-      val srcRes = MergeUpsert.mergeEpoch(spark, source, batch, e)
-      updates += TableUpdate("source", e, srcRes)
-
-      // materialize the post-merge source snapshot ONCE per epoch: every
-      // domain restricts the same live state, and without the cache each
-      // would re-run the merge-on-read collapse (5x the scans and
-      // shuffles of the epoch's dominant cost at scale)
-      val snap = source.snapshot(spark)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      // upstream domain snapshots are NOT materialized: their restriction
-      // to the affected groups pushes below the latest_by collapse (see
-      // latestPerKey), so each consumer's read is O(affected) — cheaper
-      // at scale than persisting O(table) upstream state per epoch even
-      // when several domains share one upstream. For a VIEWED upstream
-      // (today only `location`) the read adds the view's aggregate on
-      // top: a restriction on the view's grouping columns still pushes
-      // below it (stock PushDownLeftSemiAntiJoin handles grouping-only
-      // conditions) and on below the collapse; one on a derived measure
-      // column would re-aggregate the affected sub-grain — acceptable,
-      // since the sub-grain is itself already O(groups), not O(source)
-      val upstreamSnap: String => DataFrame = domainReader(spark, domains, tables)
-      try domains.foreach { d =>
-        val dTable = tables(d.name)
-        if (dTable.lastCommittedEpoch < e) {
-          // catch-up form: a domain that fell behind unions the affected
-          // groups of every missed epoch into one recomputation
-          val missed = events.filter(col("epoch") > dTable.lastCommittedEpoch
-            && col("epoch") <= e)
-          val bound = affectedKeyBound(source, dTable.lastCommittedEpoch, e)
-          val res = updateDomain(spark, d, dTable, source, snap, upstreamSnap,
-            missed,
-            // this feed only covers epochs <= maxEpoch: if the pinned
-            // post version's watermark runs PAST it (a concurrent writer
-            // with a LONGER feed advanced the source mid-run), the
-            // interval's touched keys cannot be produced from here and
-            // the algebraic fold must fall back to the pinned full
-            // recompute — filtering this feed would silently miss the
-            // foreign epochs' keys and commit a wrong rollup that never
-            // self-heals (the streaming form guards the same case). A
-            // head watermark <= maxEpoch stays exact even when it
-            // exceeds THIS run's stop: epochs are deterministic feed
-            // slices, so a concurrent driver over the same feed commits
-            // identical content
-            (lo, hi) => if (hi <= maxEpoch) Some(events.filter(
-              col("epoch") > lo && col("epoch") <= hi)) else None,
-            e, bound)
-          updates += TableUpdate(d.name, e, res)
-        } else updates += TableUpdate(d.name, e, None)
-      } finally snap.unpersist(blocking = false)
-
+    val updates = (start to stop).flatMap { e =>
+      val ups = applyEpoch(spark, events.filter(col("epoch") === e), source,
+        domains, tables, e, eventsIn)
       sinceCompact += 1
       if (compactEvery > 0 && sinceCompact >= compactEvery && e < stop) {
-        val all = source +: domains.map(d => tables(d.name))
+        // mid-run maintenance is INCREMENTAL: fold only the buckets whose
+        // delta count crossed the threshold (O(hot buckets), not O(table))
         if (all.count(t => Maintenance.compactHotBuckets(spark, t,
           minDeltaFiles = compactEvery).isDefined) > 0) compactions += 1
         sinceCompact = 0
       }
+      ups
     }
     if (compactEvery > 0 && start <= stop) {
-      (source +: domains.map(d => tables(d.name))).foreach { t =>
+      all.foreach { t =>
         if (t.currentManifest.exists(_.deltaFiles.nonEmpty) &&
           Maintenance.compact(spark, t).isDefined) compactions += 1
       }
     }
-    PipelineReport(updates.result(), compactions)
+    PipelineReport(updates, compactions)
   }
 
-  /** Shared front-door validation for [[run]] and [[applyEpochBatch]]:
+  /** Front-door validation for [[run]] and the streaming pipeline:
     * dependency order (each `dependsOn` declared earlier) AND DomainDef ↔
     * existing-table agreement on the merge key — a table's committed
     * keyCols win over the constructor seed, so a changed DomainDef run
     * against an old root would otherwise silently re-key rows under the
     * stale semantics. */
-  private def validateTopology(domains: Seq[DomainDef],
-                               tables: Map[String, LakeTable]): Unit = {
+  private[graft] def validateTopology(domains: Seq[DomainDef],
+                                      tables: Map[String, LakeTable]): Unit = {
     domains.foldLeft(Set.empty[String]) { (seen, d) =>
       require(d.dependsOn.forall(seen.contains),
         s"domain ${d.name} depends on ${d.dependsOn.mkString(",")} — " +
@@ -589,40 +557,64 @@ object Pipeline {
     }
   }
 
-  /** One epoch applied from a single delivered batch — the STREAMING form
-    * (StreamIngest.startPipeline's foreachBatch): Structured Streaming
-    * re-executes a failed batchId with identical content, so a domain is
-    * never more than one epoch behind and the affected-group set is the
-    * batch itself. A domain attached mid-stream (several epochs behind)
-    * must be caught up by the batch [[run]] first — the batch at hand no
-    * longer contains the missed epochs' affected groups. */
-  def applyEpochBatch(spark: SparkSession, batch: DataFrame,
-                      source: LakeTable, domains: Seq[DomainDef],
-                      tables: Map[String, LakeTable],
-                      epoch: Long): Seq[TableUpdate] = {
-    validateTopology(domains, tables)
+  /** THE per-epoch step — the batch [[run]] (and so [[Replayer.run]]) and
+    * both streaming sinks drive every epoch through here: merge `batch`
+    * into the source as epoch `e`, then update each lagging domain in
+    * dependency order. `eventsIn(lo, hi)` yields the feed's events of
+    * epochs `(lo, hi]`, or None when the caller cannot produce them: a
+    * domain at watermark L < e recomputes the groups touched by
+    * `eventsIn(L, e)` — the catch-up union of every missed epoch — and
+    * the algebraic fold reads its interval through it too. The streaming
+    * form holds only the batch at hand, so a domain more than one epoch
+    * behind is refused there. Already-committed (table, epoch) pairs skip
+    * through the exactly-once merge (result None); every other update must
+    * have committed. */
+  private[graft] def applyEpoch(spark: SparkSession, batch: DataFrame,
+      source: LakeTable, domains: Seq[DomainDef],
+      tables: Map[String, LakeTable], e: Long,
+      eventsIn: (Long, Long) => Option[DataFrame]): Seq[TableUpdate] = {
     val updates = Seq.newBuilder[TableUpdate]
-    updates += TableUpdate("source", epoch,
-      MergeUpsert.mergeEpoch(spark, source, batch, epoch))
+    def record(table: String, r: Option[MergeUpsert.MergeResult]): Unit = {
+      // mergeEpoch either commits (retrying lost CAS races internally),
+      // returns None for an already-committed epoch, or throws — a silent
+      // uncommitted merge must never fall through to the next epoch
+      if (r.exists(!_.committed)) throw new IllegalStateException(
+        s"table $table merged epoch $e but failed to commit")
+      updates += TableUpdate(table, e, r)
+    }
+    record("source", MergeUpsert.mergeEpoch(spark, source, batch, e))
+    // the plain replay: no snapshot, so no extra manifest read or listing
+    if (domains.isEmpty) return updates.result()
+
+    // materialize the post-merge source snapshot ONCE per epoch: every
+    // domain restricts the same live state, and without the cache each
+    // would re-run the merge-on-read collapse (5x the scans and shuffles
+    // of the epoch's dominant cost at scale)
     val snap = source.snapshot(spark)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // upstream domain snapshots are NOT materialized: their restriction to
+    // the affected groups pushes below the latest_by collapse (see
+    // latestPerKey), so each consumer's read is O(affected) — cheaper at
+    // scale than persisting O(table) upstream state per epoch even when
+    // several domains share one upstream. For a VIEWED upstream (today
+    // only `location`) the read adds the view's aggregate on top: a
+    // restriction on the view's grouping columns still pushes below it
+    // (stock PushDownLeftSemiAntiJoin handles grouping-only conditions)
+    // and on below the collapse; one on a derived measure column would
+    // re-aggregate the affected sub-grain — acceptable, since the
+    // sub-grain is itself already O(groups), not O(source)
     val upstreamSnap: String => DataFrame = domainReader(spark, domains, tables)
     try domains.foreach { d =>
       val dTable = tables(d.name)
-      if (dTable.lastCommittedEpoch < epoch) {
-        require(dTable.lastCommittedEpoch >= epoch - 1,
-          s"domain ${d.name} is at epoch ${dTable.lastCommittedEpoch}, " +
-            s"more than one behind batch $epoch — catch it up with the " +
-            "batch Pipeline.run before streaming")
-        updates += TableUpdate(d.name, epoch,
-          updateDomain(spark, d, dTable, source, snap, upstreamSnap, batch,
-            // the stream holds ONLY this batch: any wider range (a
-            // concurrent writer advanced the source) → algebraic falls
-            // back to the pinned full recompute
-            (lo, hi) => if (lo == epoch - 1 && hi == epoch) Some(batch)
-              else None,
-            epoch, affectedKeyBound(source, epoch - 1, epoch)))
-      } else updates += TableUpdate(d.name, epoch, None)
+      val last = dTable.lastCommittedEpoch
+      record(d.name, if (last >= e) None else {
+        val missed = eventsIn(last, e).getOrElse(
+          throw new IllegalArgumentException(s"domain ${d.name} is at " +
+            s"epoch $last, more than one behind batch $e — catch it up " +
+            "with the batch Pipeline.run before streaming"))
+        updateDomain(spark, d, dTable, source, snap, upstreamSnap, missed,
+          eventsIn, e, affectedKeyBound(source, last, e))
+      })
     } finally snap.unpersist(blocking = false)
     updates.result()
   }

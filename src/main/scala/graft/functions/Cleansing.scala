@@ -27,9 +27,6 @@ object Cleansing {
   /** F5: `'' -> NULL` (the Python loader's `_clean`). */
   def emptyToNull(c: Column): Column = nullif(trim(c), lit(""))
 
-  /** F1-adjacent: stable content digest per the input_hint invariant. */
-  def contentSha(c: Column): Column = sha2(c.cast("string"), 256)
-
   /** Vertica `::!` soft cast: NULL on failure, never error. The string→int
     * case routes through the native [[TryCastInt]] kernel: Spark 4's TRY
     * cast throws/catches per failing row (~5µs of fillInStackTrace per

@@ -371,19 +371,12 @@ object Md5PrefixLongArray {
   * (lang_id_heuristic evaluates 15 of them). One byte scan, no
   * allocation. */
 case class StopwordCount(child: Expression, word: String)
-  extends UnaryExpression {
+  extends UnaryExpression with StringToIntKernel {
   require(word.nonEmpty && !word.exists(c =>
       c == ' ' || c == '\t' || c == '\n' || c == '\u000B' || c == '\f' ||
         c == '\r'),
     "stopword must be non-empty with no ASCII-whitespace characters")
 
-  override def checkInputDataTypes(): TypeCheckResult =
-    child.dataType match {
-      case StringType => TypeCheckResult.TypeCheckSuccess
-      case other => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName needs string, got $other")
-    }
-  override def dataType: DataType = IntegerType
   override def prettyName: String = "stopword_count"
 
   @transient private lazy val wordBytes: Array[Byte] =

@@ -155,25 +155,15 @@ object Maintenance {
       .filter(!(col("__deleted") && col("updated_seq") <= lit(tombstoneWatermark)))
 
     val commitDir = table.newCommitDir(version)
-    val timing = sys.env.get("GRAFT_MERGE_TIMING").contains("1")
-    def timed[T](label: String)(f: => T): T = {
-      if (!timing) f else {
-        val t0 = System.nanoTime()
-        val r = f
-        System.err.println(f"[compact v$version] $label%-10s ${(System.nanoTime()-t0)/1e9}%7.2fs")
-        r
-      }
-    }
     // explicit repartition on the key: one reducer per bucket, so each
     // bucket compacts to exactly one file (bucketOf == partition id)
-    timed("write") { merged.repartition(nb, current.keyCols.map(col): _*)
+    merged.repartition(nb, current.keyCols.map(col): _*)
       .withColumn("bucket", MergeUpsert.bucketOf(nb, current.keyCols))
       .write.mode("overwrite").partitionBy("bucket")
       .options(MergeUpsert.ParquetWriteOptions)
-      .parquet(commitDir.toString) }
+      .parquet(commitDir.toString)
 
-    val newFiles = timed("footers") {
-      table.listCommitFiles(commitDir, withRowCounts = true) }
+    val newFiles = table.listCommitFiles(commitDir, withRowCounts = true)
     val kept = buckets match {
       case Some(bs) => current.files.filterNot(f => bs.contains(f.bucket))
       case None => Seq.empty
@@ -219,9 +209,4 @@ object Maintenance {
     if (hot.isEmpty) None
     else compact(spark, table, tombstoneWatermark, Some(hot))
   }
-
-  /** Back-compat alias: tombstone GC is compaction with a watermark. */
-  def compactTombstones(spark: SparkSession, table: LakeTable,
-                        watermark: Long): Option[Manifest] =
-    compact(spark, table, watermark)
 }

@@ -205,16 +205,6 @@ object MergeUpsert {
       bytesWritten: Long,
       bucketsTouched: Int)
 
-  private val timing = sys.env.get("GRAFT_MERGE_TIMING").contains("1")
-  private def timed[T](label: String, epoch: Long)(f: => T): T = {
-    if (!timing) f else {
-      val t0 = System.nanoTime()
-      val r = f
-      System.err.println(f"[merge e$epoch] $label%-10s ${(System.nanoTime()-t0)/1e9}%7.2fs")
-      r
-    }
-  }
-
   /** Merge one epoch batch as a delta commit. Caller guarantees `batch`
     * holds exactly the events of `epoch` (plus possible re-deliveries of
     * older events, which latest-wins neutralizes). Returns None if the
@@ -334,11 +324,11 @@ object MergeUpsert {
       max(col("updated_seq")).as("maxSeq"),
       sum(when(col("__deleted"), 1L).otherwise(0L)).as("deletes"))
     val commitDir = table.newCommitDir(current.map(_.version).getOrElse(0L) + 1)
-    timed("write", epoch) { observed
+    observed
       .withColumn("bucket", bucketOf(nb, kc))
       .write.mode("overwrite").partitionBy("bucket")
       .options(ParquetWriteOptions)
-      .parquet(commitDir.toString) }
+      .parquet(commitDir.toString)
 
     // A ZERO-row batch (e.g. a derived domain whose epoch touches no
     // member of its partial membership) executes zero tasks, so the
@@ -360,8 +350,7 @@ object MergeUpsert {
 
     // no footer reads on the hot path: bytes from the dir listing, rows
     // from the observation (per-file counts are recomputed at compaction)
-    val newFiles = timed("list", epoch) {
-      table.listCommitFiles(commitDir).map(_.copy(tier = "delta")) }
+    val newFiles = table.listCommitFiles(commitDir).map(_.copy(tier = "delta"))
     val bucketsTouched = newFiles.map(_.bucket).distinct.size
     require(metricsRow.nonEmpty || newFiles.isEmpty,
       s"mergeEpoch($epoch): write produced ${newFiles.size} files but no " +

@@ -29,8 +29,6 @@ object Similarity {
     aggregate(zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
       lit(0.0), (acc, v) => acc + v)
 
-  def norm(a: Column): Column = sqrt(dot(a, a))
-
   /** Cosine similarity — the native codegen'd [[graft.functions.CosineSim]]
     * (one fused loop: dot + both norms). The equivalent
     * `aggregate(zip_with(...))` tree is interpreted per element and ran

@@ -216,7 +216,7 @@ class ChangeFeedSpec extends SparkSpec {
     ChangeFeed.drain(spark, source, liveCur)(
       ChangeFeed.mirrorInto(spark, source, live)) // live applies the delete
     // GC the tombstone out of HEAD STATE; every manifest stays on disk
-    assert(Maintenance.compactTombstones(spark, source, watermark = 2L).isDefined)
+    assert(Maintenance.compact(spark, source, tombstoneWatermark = 2L).isDefined)
     assert(source.read(spark).filter(col("__deleted")).count() == 0,
       "tombstone must be physically gone")
     val staleApplied = stale.currentManifest.get.epochWatermark
@@ -260,7 +260,7 @@ class ChangeFeedSpec extends SparkSpec {
     ).toDF(), 1L)
     // v3: GC the tombstone with a watermark above the delete's seq but
     // below the stale mirror's lastSeq
-    assert(Maintenance.compactTombstones(spark, source, watermark = 60L)
+    assert(Maintenance.compact(spark, source, tombstoneWatermark = 60L)
       .isDefined)
     assert(source.read(spark).filter(col("__deleted")).count() == 0,
       "tombstone must be physically gone")

@@ -59,7 +59,7 @@ class MaintenanceSpec extends SparkSpec {
     val tombsBefore = table.read(spark).filter(col("__deleted")).count()
     assert(tombsBefore > 0, "fixture must contain deletes")
 
-    val m = Maintenance.compactTombstones(spark, table, watermark = Long.MaxValue)
+    val m = Maintenance.compact(spark, table, tombstoneWatermark = Long.MaxValue)
     assert(m.isDefined)
     assert(FoldOracle.digestOfTable(table.snapshot(spark)) == before)
     assert(table.read(spark).filter(col("__deleted")).count() == 0)
@@ -74,7 +74,7 @@ class MaintenanceSpec extends SparkSpec {
       .select("updated_seq").collect().map(_.getLong(0)).sorted
     assume(tombSeqs.length >= 2)
     val mid = tombSeqs(tombSeqs.length / 2)
-    Maintenance.compactTombstones(spark, table, watermark = mid)
+    Maintenance.compact(spark, table, tombstoneWatermark = mid)
     val remaining = table.read(spark).filter(col("__deleted"))
       .select("updated_seq").collect().map(_.getLong(0))
     assert(remaining.forall(_ > mid))
@@ -85,7 +85,7 @@ class MaintenanceSpec extends SparkSpec {
     val table = new LakeTable(tmpDir("lake"), 4)
     val events = ChangeGen.stream(spark, cfg).toDF()
     Replayer.run(spark, events, table, maxEpoch = 5, upToEpoch = Some(2))
-    Maintenance.compactTombstones(spark, table, watermark = Long.MaxValue)
+    Maintenance.compact(spark, table, tombstoneWatermark = Long.MaxValue)
     Maintenance.vacuum(table, graceMillis = 0)
     Replayer.run(spark, events, table, maxEpoch = 5)
     assert(FoldOracle.digestOfTable(table.snapshot(spark)) ==

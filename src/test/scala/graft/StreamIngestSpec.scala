@@ -134,6 +134,34 @@ class StreamIngestSpec extends SparkSpec {
       == DomainOracle.codeValueLines(st))
   }
 
+  test("streaming epoch step refuses a domain two epochs behind the batch; " +
+      "caught up by the batch Pipeline.run, the next batch streams through") {
+    import graft.engine.{Pipeline, Replayer}
+    val events = ChangeGen.stream(spark, cfg).toDF()
+    val source = new LakeTable(tmpDir("rsrc"), 8)
+    val domains = Pipeline.omopDomains(spark).take(1) // person
+    val tables = Pipeline.openDomainTables(tmpDir("rdom"), domains, 4)
+    Pipeline.run(spark, events, source, domains, tables, maxEpoch = 7,
+      upToEpoch = Some(0))
+    Replayer.run(spark, events, source, maxEpoch = 7, upToEpoch = Some(1))
+    // person at 0, batch 2: the batch alone no longer holds epoch 1's groups
+    val ex = intercept[IllegalArgumentException] {
+      StreamIngest.applyBatch(events.filter(col("epoch") === 2), 2L, source,
+        domains, tables, compactEvery = 0)
+    }
+    assert(ex.getMessage.contains(
+      "catch it up with the batch Pipeline.run before streaming"), ex)
+    assert(tables("person").lastCommittedEpoch == 0)
+
+    Pipeline.run(spark, events, source, domains, tables, maxEpoch = 7,
+      upToEpoch = Some(2))
+    val ups = StreamIngest.applyBatch(events.filter(col("epoch") === 3), 3L,
+      source, domains, tables, compactEvery = 0)
+    assert(ups.map(u => (u.table, u.result.isDefined)) ==
+      Seq("source" -> true, "person" -> true))
+    assert(tables("person").lastCommittedEpoch == 3)
+  }
+
   test("re-running a fully-drained stream with a fresh checkpoint is a harmless replay") {
     val wal = tmpDir("wal")
     val table = new LakeTable(tmpDir("lake"), 8)
